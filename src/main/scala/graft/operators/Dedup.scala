@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.SimHash64.simhash64
@@ -529,24 +529,42 @@ object Dedup {
     *  - small-star: every node connects its smaller-or-equal neighbors
     *    to their collective minimum — stars re-root at the true minimum.
     *
+    * The input is materialized ONCE: one eager localCheckpoint of the
+    * canonical (smaller, larger) distinct edge set, self-loops kept. The
+    * loop's edge set is that checkpoint minus self-loops, and the node
+    * universe is its distinct endpoints — so a caller's un-materialized
+    * edge build (g3's basket aggregate, pair explode and support
+    * aggregate) runs once per call, not once per derived frame. The
+    * self-loops stay in the checkpoint because a node whose only edge is
+    * (v, v) is still a node and must come back as its own singleton.
+    *
     * Each round is localCheckpoint'd: the fixpoint loop would otherwise
     * grow an exponentially deep lazy plan (the classic iterative-algorithm
     * trap on Spark).
+    *
+    * @param maxRounds round budget, counting the detecting round: the
+    *   detector reports on each round's INPUT, so a graph whose star
+    *   forest forms after r rounds needs maxRounds ≥ r + 1 (the path
+    *   (1,2),(2,3) takes one real round plus the detecting one, so it
+    *   throws at maxRounds = 1 and converges at 2). Exhausting the budget
+    *   throws rather than returning a partial labeling.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    def canonical(src: Column, dst: Column) =
-      Seq(least(src, dst).as("src"), greatest(src, dst).as("dst"))
-    val raw = edges
+    // a swap, not least/greatest: those skip nulls and would turn
+    // (null, v) into (v, v), dropping the null endpoint from the nodes
+    val ordered = col("src") <= col("dst")
+    val canon = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    // node universe BEFORE dropping self-loops: a node whose only edge is
-    // (v, v) is still a node and must come back as its own singleton
-    val allNodes = raw.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct().localCheckpoint(true)
-    var e = raw
-      .filter(col("src") =!= col("dst"))
-      .select(canonical(col("src"), col("dst")): _*)
+      .select(when(ordered, col("src")).otherwise(col("dst")).as("src"),
+        when(ordered, col("dst")).otherwise(col("src")).as("dst"))
       .distinct()
       .localCheckpoint(true)
+    // both derive from the one checkpoint, which stays alive to the end:
+    // the loop's first unpersistCheckpoint(e) is a no-op on this Filter,
+    // and the closing left_anti still reads allNodes from it
+    val allNodes = canon.select(explode(array(col("src"), col("dst"))).as("node"))
+      .distinct()
+    var e = canon.filter(col("src") =!= col("dst"))
 
     // Convergence (r12 rewrite): the edge set is the answer shape — a
     // forest of stars rooted at component minima — exactly when EVERY
@@ -614,7 +632,8 @@ object Dedup {
     // the ingest-sink specs caught it); the fallback runs the SAME
     // root-or-leaf predicate as its own small aggregate job over the
     // round's input — one extra job per round, only in such contexts,
-    // and still cheaper than the old 2|E| roles shuffle.
+    // and still cheaper than the old 2|E| roles shuffle. After the first
+    // miss, LoopMetrics sends every later round straight here.
     def forestFlagJob(cur: DataFrame): Boolean = {
       val bidir = cur.select(col("src").as("u"), col("dst").as("v"))
         .union(cur.select(col("dst").as("u"), col("src").as("v")))
@@ -623,14 +642,14 @@ object Dedup {
           (col("deg") === 1 && col("mv") < col("u"))), lit(true)).as("f"))
         .head().getBoolean(0)
     }
+    val metrics = new org.apache.spark.sql.GraftShims.LoopMetrics()
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       {
         val obs = org.apache.spark.sql.Observation()
         val next = starRound(e, obs).localCheckpoint(true)
-        converged = org.apache.spark.sql.GraftShims
-          .observedMetric(obs, "input_is_forest")
+        converged = metrics(obs, "input_is_forest")
           .map(_.asInstanceOf[Boolean])
           .getOrElse(forestFlagJob(e))
         if (probe) {

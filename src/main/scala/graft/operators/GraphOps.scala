@@ -613,14 +613,14 @@ object GraphOps {
     // and its jobs are gone; convergence semantics unchanged. Where the
     // metric doesn't arrive (streaming foreachBatch bodies — see
     // GraftShims.observedMetric), a count() of the materialized
-    // checkpoint takes over.
+    // checkpoint takes over — from the first miss on, without waiting.
     def counted(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
       val obs = org.apache.spark.sql.Observation()
       (df.observe(obs, count(lit(1)).as("n")), obs)
     }
+    val metrics = new org.apache.spark.sql.GraftShims.LoopMetrics()
     def sizeOf(ck: DataFrame, obs: org.apache.spark.sql.Observation): Long =
-      org.apache.spark.sql.GraftShims.observedMetric(obs, "n")
-        .map(_.asInstanceOf[Long]).getOrElse(ck.count())
+      metrics(obs, "n").map(_.asInstanceOf[Long]).getOrElse(ck.count())
     val (k0, obs0) = counted(sym
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k))

@@ -74,4 +74,21 @@ object GraftShims {
         scala.concurrent.duration.Duration(timeoutSec, "s"))
       scala.util.Try(row.getAs[Any](key)).toOption
     } catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** [[observedMetric]] for the rounds of ONE fixpoint loop. The first
+    * read that yields nothing (timeout or empty row) shows the loop runs
+    * where observe metrics don't arrive, so every later read returns
+    * None at once: the remaining rounds go straight to the caller's
+    * fallback job instead of waiting out the timeout again each round.
+    */
+  final class LoopMetrics(timeoutSec: Int = 30) {
+    private var available = true
+    def apply(obs: Observation, key: String): Option[Any] =
+      if (!available) None
+      else {
+        val v = observedMetric(obs, key, timeoutSec)
+        available = v.isDefined
+        v
+      }
+  }
 }

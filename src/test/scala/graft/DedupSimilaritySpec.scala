@@ -436,12 +436,57 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got === Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
   }
 
+  test("connected components read their input exactly once") {
+    // every input row passes through the counting UDF; an un-materialized
+    // edge frame evaluated once per derived frame would count 2×
+    val acc = spark.sparkContext.longAccumulator("cc_input_rows")
+    val tap = udf { (x: Long) => acc.add(1); x }.asNondeterministic()
+    // range, not a LocalRelation: ConvertToLocalRelation would evaluate
+    // the projection on the driver during optimization
+    val n = 40L
+    val edges = spark.range(0, n, 1, 4)
+      .select(tap(col("id")).as("src"), ((col("id") * 7) % 13).as("dst"))
+    val got = Dedup.connectedComponents(edges).collect()
+    assert(acc.value === n, s"input rows evaluated ${acc.value} times for $n rows")
+    assert(got.length === n, "every node of the edge frame is labeled")
+  }
+
+  test("connected components: maxRounds counts the detecting round") {
+    // one real round turns the path into the star {(1,2),(1,3)}; the
+    // detector sees the star only as the NEXT round's input
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(path, maxRounds = 1))
+    assert(err.getMessage.contains("did not converge in 1 rounds"))
+    val got = Dedup.connectedComponents(path, maxRounds = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("fixpoint loops stop waiting for observe metrics after the first miss") {
+    // an Observation never attached to a Dataset never completes: the
+    // first read waits out the timeout, every later one returns at once
+    val metrics = new org.apache.spark.sql.GraftShims.LoopMetrics(timeoutSec = 1)
+    val t0 = System.nanoTime()
+    assert(metrics(org.apache.spark.sql.Observation(), "n").isEmpty)
+    val first = (System.nanoTime() - t0) / 1e9
+    assert(first >= 0.9, s"first read returned after $first s, before its timeout")
+    val t1 = System.nanoTime()
+    assert(metrics(org.apache.spark.sql.Observation(), "n").isEmpty)
+    val second = (System.nanoTime() - t1) / 1e9
+    assert(second < 0.5, s"second round waited $second s")
+  }
+
   test("connected components match union-find ground truth on random graphs") {
     for (seed <- Seq(1, 7, 42)) {
       val rnd = new scala.util.Random(seed)
       val n = 60
-      val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
+      val drawn = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      // canonicalisation runs before the self-loop filter, so mix in
+      // self-loops, duplicated edges and reversed (dst, src) copies
+      val loops = Seq.fill(5) { val v = rnd.nextInt(n).toLong; (v, v) }
+      val edges = rnd.shuffle(drawn ++ loops ++ drawn.take(8) ++
+        drawn.drop(8).take(8).map(_.swap))
       // driver-side union-find as independent ground truth
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }

@@ -29,6 +29,8 @@ class OnceGateSpec extends SparkTestBase {
     // the filter must sit ABOVE the projection computing e — pushing it
     // below would re-derive the kernel at two sites
     val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("Filter") && plan.contains("once_gate"),
+      s"plan lost the Filter or the gate:\n$plan")
     assert(plan.indexOf("once_gate") > plan.indexOf("Filter"),
       s"filter was pushed below the gate:\n$plan")
     assert(df.count() == 2) // 4 and 6
