@@ -518,10 +518,14 @@ object Dedup {
     * rounds — a chain of near-dup docs (common in crawl data: A≈B≈C≈…)
     * makes that linear in cluster size. The alternating algorithm
     * converges in O(log² n) rounds regardless of shape, and each round is
-    * two hash aggregations + two hash joins over the CURRENT edge set
-    * (which shrinks toward one star per component) — no adjacency lists
-    * are ever materialized per node, so a 100 TB pair set is just a few
-    * shuffles of its own size.
+    * one keyed window pass per star over the CURRENT edge set (which
+    * shrinks toward one star per component) — no adjacency lists are ever
+    * materialized per node, so a 100 TB pair set is just a few shuffles
+    * of its own size. A window, not a per-node aggregate joined back onto
+    * the edges: the aggregate-and-join form plans a partial-aggregate
+    * shuffle plus a broadcast or second shuffle per star, each its own
+    * job under AQE, while the window hands every edge row its node's
+    * minimum in the one shuffle that keys the star ([[starRound]]).
     *
     *  - large-star: every node connects its LARGER neighbors to its
     *    minimum neighbor (or itself) — long tendrils collapse toward
@@ -571,61 +575,31 @@ object Dedup {
     // node is a root (all neighbors larger) or a leaf (exactly one
     // neighbor, and it is smaller): a leaf's single smaller neighbor
     // must itself be a root, whose neighbors are then all leaves, so
-    // each component is one star. largeStar's per-node groupBy already
+    // each component is one star. largeStar's per-node window already
     // computes min-neighbor; one extra count column turns it into this
-    // test, and an observe() on the join output (every node appears as
-    // a `u` group in bidir) folds the global AND DURING the round's own
-    // checkpoint job. Per-round convergence is therefore FREE — the
-    // previous shape paid a 2|E| node-keyed shuffle + a separate action
-    // (isStarForest) every round. The price: the detector reports on the
-    // round's INPUT, so the loop runs exactly one no-op round past the
-    // fixpoint (star forests are fixpoints of both stars) and returns
-    // the input edge set of the detecting round.
+    // test ([[rootOrLeaf]]), and an observe() on the window output (every
+    // node appears as a `u` partition in bidir) folds the global AND
+    // DURING the round's own checkpoint job. Per-round convergence is
+    // therefore FREE — the previous shape paid a 2|E| node-keyed shuffle
+    // + a separate action (isStarForest) every round. The price: the
+    // detector reports on the round's INPUT, so the loop runs exactly one
+    // no-op round past the fixpoint (star forests are fixpoints of both
+    // stars) and returns the input edge set of the detecting round.
     //
     // Duplicate discipline (r11 dropped largeStar's distinct, r12 drops
     // smallStar's): largeStar emits one row per input row (the v > u
-    // half of bidir), smallStar at most input + |V'| rows, both
-    // groupBy-min aggregates absorb duplicates, and smallStar's toRoot
-    // (one row per u-group) re-emits a formed forest exactly
-    // deduplicated — so the fixpoint multiset is the DISTINCT star
-    // forest with no distinct() exchange paid per round. A duplicated
-    // edge makes its dst's bidir count 2, failing the leaf test — the
-    // detector treats dup-carrying forests as unconverged, which costs
-    // at most one extra (cheap, shrunken) round until toRoot dedups, and
-    // never a wrong answer. GRAFT_CC_PROBE=1 prints per-round row/dup
-    // counts (the d7 probe VERDICT r11 asked for; measured sf0.1: zero
-    // dup rows in every round of g3 and d7).
+    // half of bidir), smallStar at most input + |V'| rows, both window
+    // minima are blind to duplicates, and smallStar's toRoot (the
+    // row_number = 1 row of each u partition) re-emits a formed forest
+    // exactly deduplicated — so the fixpoint multiset is the DISTINCT
+    // star forest with no distinct() exchange paid per round. A
+    // duplicated edge makes its dst's bidir count 2, failing the leaf
+    // test — the detector treats dup-carrying forests as unconverged,
+    // which costs at most one extra (cheap, shrunken) round until toRoot
+    // dedups, and never a wrong answer. GRAFT_CC_PROBE=1 prints per-round
+    // row/dup counts (the d7 probe VERDICT r11 asked for; measured sf0.1:
+    // zero dup rows in every round of g3 and d7).
     val probe = sys.env.contains("GRAFT_CC_PROBE")
-
-    // One alternating round (largeStar then smallStar) with the inline
-    // forest detector on the round's input; m ≤ u < v after largeStar,
-    // m < v after smallStar.
-    def starRound(cur: DataFrame,
-        obs: org.apache.spark.sql.Observation): DataFrame = {
-      val bidir = cur.select(col("src").as("u"), col("dst").as("v"))
-        .union(cur.select(col("dst").as("u"), col("src").as("v")))
-      val mL = bidir.groupBy("u").agg(min("v").as("mv"), count(lit(1)).as("deg"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"),
-          // root: all neighbors larger; leaf: single smaller neighbor.
-          // mv = u impossible (self-loops removed); duplicate edges push
-          // deg past 1 and correctly fail the leaf test.
-          (col("mv") > col("u") ||
-            (col("deg") === 1 && col("mv") < col("u"))).as("starred"))
-      val large = bidir.join(mL, "u")
-        .observe(obs,
-          coalesce(min(col("starred")), lit(true)).as("input_is_forest"))
-        .filter(col("v") > col("u"))
-        .select(col("m").as("src"), col("v").as("dst"))
-      // smallStar: group each edge under its LARGER endpoint
-      val dir = large.select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      val mS = dir.groupBy("u").agg(min("v").as("m"))
-      val reRooted = dir.join(mS, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("m").as("src"), col("v").as("dst"))
-      val toRoot = mS.select(col("m").as("src"), col("u").as("dst"))
-      reRooted.union(toRoot)
-    }
 
     // Observe metrics don't arrive inside a streaming foreachBatch body
     // (the cloned session completes the Observation with an empty row —
@@ -634,14 +608,10 @@ object Dedup {
     // round's input — one extra job per round, only in such contexts,
     // and still cheaper than the old 2|E| roles shuffle. After the first
     // miss, LoopMetrics sends every later round straight here.
-    def forestFlagJob(cur: DataFrame): Boolean = {
-      val bidir = cur.select(col("src").as("u"), col("dst").as("v"))
-        .union(cur.select(col("dst").as("u"), col("src").as("v")))
-      bidir.groupBy("u").agg(min("v").as("mv"), count(lit(1)).as("deg"))
-        .agg(coalesce(min(col("mv") > col("u") ||
-          (col("deg") === 1 && col("mv") < col("u"))), lit(true)).as("f"))
+    def forestFlagJob(cur: DataFrame): Boolean =
+      bidirected(cur).groupBy("u").agg(min("v").as("mv"), count(lit(1)).as("deg"))
+        .agg(coalesce(min(rootOrLeaf), lit(true)).as("f"))
         .head().getBoolean(0)
-    }
     val metrics = new org.apache.spark.sql.GraftShims.LoopMetrics()
     var converged = false
     var round = 0
@@ -678,6 +648,50 @@ object Dedup {
     val roots = allNodes.join(members, Seq("node"), "left_anti")
       .select(col("node"), col("node").as("component"))
     members.union(roots)
+  }
+
+  /** Both orientations of every edge, as (u, v). */
+  private def bidirected(cur: DataFrame): DataFrame =
+    cur.select(col("src").as("u"), col("dst").as("v"))
+      .union(cur.select(col("dst").as("u"), col("src").as("v")))
+
+  /** The star-forest test per node `u` of [[bidirected]], over its minimum
+    * neighbor `mv` and degree `deg`: a root (all neighbors larger) or a
+    * leaf (a single neighbor, and it is smaller). mv = u is impossible
+    * (self-loops removed); a duplicated edge pushes deg past 1 and
+    * correctly fails the leaf test.
+    */
+  private val rootOrLeaf =
+    col("mv") > col("u") || (col("deg") === 1 && col("mv") < col("u"))
+
+  /** One alternating round of [[connectedComponents]] (largeStar then
+    * smallStar) over the self-loop-free edge set `cur` (src < dst), with
+    * the forest detector on the round's INPUT observed into `obs` as
+    * `input_is_forest`. Each star is one keyed window pass — a shuffle
+    * and a sort, no join — so a round plans exactly two shuffles.
+    * m ≤ u < v after largeStar, m < v after smallStar.
+    */
+  private[graft] def starRound(cur: DataFrame,
+      obs: org.apache.spark.sql.Observation): DataFrame = {
+    import org.apache.spark.sql.expressions.{Window => W}
+    val byU = W.partitionBy("u")
+    val large = bidirected(cur)
+      .select(col("u"), col("v"),
+        min("v").over(byU).as("mv"), count(lit(1)).over(byU).as("deg"))
+      .observe(obs, coalesce(min(rootOrLeaf), lit(true)).as("input_is_forest"))
+      .filter(col("v") > col("u"))
+    // smallStar keys each largeStar edge (m, v) under its LARGER endpoint,
+    // which is v since m ≤ u < v. The running min over v ascending is the
+    // partition minimum m; the row_number = 1 row emits toRoot's (m, u),
+    // every row with v ≠ m emits reRooted's (m, v), and only the further
+    // copies of (u, m) emit nothing: reRooted ∪ toRoot, duplicates included
+    val byUv = W.partitionBy("u").orderBy("v")
+    large.select(col("v").as("u"), least(col("mv"), col("u")).as("v"))
+      .select(col("u"), col("v"),
+        min("v").over(byUv).as("m"), row_number().over(byUv).as("rn"))
+      .filter(col("rn") === 1 || col("v") =!= col("m"))
+      .select(col("m").as("src"),
+        when(col("rn") === 1, col("u")).otherwise(col("v")).as("dst"))
   }
 
   /** Duplicate CLUSTERS: the transitive closure of the near-dup relation.

@@ -13,6 +13,22 @@ class DedupSimilaritySpec extends SparkTestBase {
   private val baseText =
     "the quick brown fox jumps over the lazy dog and runs far away " * 5
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftShims.waitListenerBus(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftShims.waitListenerBus(spark, 10000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
   private def docs = Seq(
     (0L, baseText),
     (1L, baseText + "trailing extra tokens appended"), // near-dup of 0
@@ -449,6 +465,34 @@ class DedupSimilaritySpec extends SparkTestBase {
     val got = Dedup.connectedComponents(edges).collect()
     assert(acc.value === n, s"input rows evaluated ${acc.value} times for $n rows")
     assert(got.length === n, "every node of the edge frame is labeled")
+
+    // and each round costs three jobs: two star shuffles and the round's
+    // checkpoint. This graph takes `rounds` rounds (pinned by maxRounds: it
+    // throws one below); a star converges in the first round and pays the
+    // same input and output jobs, so the two calls differ by rounds - 1
+    // rounds' jobs
+    val rounds = 4
+    intercept[IllegalArgumentException](
+      Dedup.connectedComponents(edges, maxRounds = rounds - 1))
+    val star = spark.range(0, n, 1, 4).select(col("id").as("src"), lit(0L).as("dst"))
+    val extra = jobsDuring(Dedup.connectedComponents(edges, rounds).collect()) -
+      jobsDuring(Dedup.connectedComponents(star, maxRounds = 1).collect())
+    assert(extra <= 3 * (rounds - 1), s"$extra jobs for ${rounds - 1} extra rounds")
+  }
+
+  test("connected components: one round is one keyed window per star") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst").localCheckpoint(true)
+    val plan = Dedup.starRound(e, org.apache.spark.sql.Observation())
+      .queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    assert(h.collect(plan) { case s: ShuffleExchangeExec => s }.size === 2, plan)
+    assert(h.collect(plan) { case w: WindowExec => w }.size === 2, plan)
+    assert(h.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(h.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
   }
 
   test("connected components: maxRounds counts the detecting round") {
@@ -478,17 +522,43 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("connected components match union-find ground truth on random graphs") {
-    for (seed <- Seq(1, 7, 42)) {
+    val random = Seq(1, 7, 42).map { seed =>
       val rnd = new scala.util.Random(seed)
       val n = 60
       val drawn = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       // canonicalisation runs before the self-loop filter, so mix in
       // self-loops, duplicated edges and reversed (dst, src) copies
       val loops = Seq.fill(5) { val v = rnd.nextInt(n).toLong; (v, v) }
-      val edges = rnd.shuffle(drawn ++ loops ++ drawn.take(8) ++
+      s"random seed $seed" -> rnd.shuffle(drawn ++ loops ++ drawn.take(8) ++
         drawn.drop(8).take(8).map(_.swap))
+    }
+    // a long path with shuffled ids: the most rounds for its size
+    val perm = new scala.util.Random(3).shuffle((0L until 200L).toVector)
+    val path = perm.zip(perm.tail)
+    // a star whose every spoke is duplicated and reversed, centred off
+    // the minimum so the star has to re-root
+    val star = (0L until 30L).filter(_ != 17L).flatMap(s => Seq((17L, s), (17L, s), (s, 17L)))
+    // two 8-cliques joined by one bridge between non-minimal members
+    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+    val cliques = clique(10L to 17L) ++ clique(30L to 37L) :+ ((15L, 33L))
+    // a graph on which one round (its smallStar) emits a duplicate row
+    def canonical(es: Seq[(Long, Long)]) =
+      es.filter(e => e._1 != e._2).map(e => (e._1 min e._2, e._1 max e._2)).distinct
+    val dupEmitting = (0 until 50).iterator.map { seed =>
+      val rnd = new scala.util.Random(seed)
+      Seq.fill(10)((rnd.nextInt(8).toLong, rnd.nextInt(8).toLong))
+    }.find { es =>
+      val out = Dedup.starRound(canonical(es).toDF("src", "dst"),
+        org.apache.spark.sql.Observation()).collect()
+      out.distinct.length < out.length
+    }
+    assert(dupEmitting.isDefined, "no small graph made a round emit a duplicate row")
+
+    val cases = random ++ Seq("shuffled path" -> path, "dup+reversed star" -> star,
+      "bridged cliques" -> cliques, "dup-emitting round" -> dupEmitting.get)
+    for ((name, edges) <- cases) {
       // driver-side union-find as independent ground truth
-      val parent = Array.tabulate(n)(identity)
+      val parent = Array.tabulate(edges.map(e => e._1 max e._2).max.toInt + 1)(identity)
       def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
       edges.foreach { case (a, b) =>
         val (ra, rb) = (find(a.toInt), find(b.toInt))
@@ -503,7 +573,7 @@ class DedupSimilaritySpec extends SparkTestBase {
         }).toMap
       val got = Dedup.connectedComponents(edges.toDF("src", "dst"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got === want, s"seed $seed")
+      assert(got === want, name)
     }
   }
 
